@@ -399,19 +399,19 @@ def merge_edge_snapshot(delta: DataFrame, edges_root: str,
             *MERGE_KEYS, "confidence"
         ).withColumn("bucket", _edge_bucket(n_buckets))
         merged = merged.unionByName(prev_df)
-    merged = (
-        merged.groupBy("bucket", *MERGE_KEYS)
-        .agg(F.max("confidence").alias("confidence"))
-    )
 
     staged = f"{edges_root}/v{batch_id}.tmp"
     final = f"{edges_root}/v{batch_id}"
     shutil.rmtree(staged, ignore_errors=True)
     if touched:
         # one shuffle task per touched bucket → exactly one file per bucket
-        # directory (small-files discipline, same as write_edges_bucketed)
+        # directory (small-files discipline, same as write_edges_bucketed).
+        # The max-merge keys include bucket, so it runs inside that same
+        # exchange: one shuffle for the aggregate and the write.
         (
             merged.repartition(len(touched), F.col("bucket"))
+            .groupBy("bucket", *MERGE_KEYS)
+            .agg(F.max("confidence").alias("confidence"))
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(f"{staged}/data")

@@ -9,10 +9,12 @@ warehouse-persisted edge table.
 
 Scale notes: degree counting keys on nodes — the canonical ids are FEW and
 HOT (a handful of dictionary addresses receive edges from half the corpus
-via the mega-repo), so per-node counts go through the positional-salt
-two-phase ``salted_agg``. The file→address→region hop broadcasts the
-located_in side (bounded by the admin-region dictionary times the address
-vocabulary — a dimension, not a fact). The per-repo top-k ranks run on
+via the mega-repo). Each count is one ``groupBy().agg()``: the map-side
+partial aggregate sends at most one row per node per map task through the
+single exchange, so a hot node never floods one reducer with raw rows. The
+file→address→region hop broadcasts the located_in side (bounded by the
+admin-region dictionary times the address vocabulary — a dimension, not a
+fact). The per-repo top-k ranks run on
 pre-aggregated (repo, address) counts — the window input is bounded by
 |repos| × |address vocabulary|, not by corpus rows.
 
@@ -35,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import _persist
-from .link import salted_agg
 
 MENTIONS = "mentions_address"
 LOCATED_IN = "located_in"
@@ -44,19 +45,16 @@ LOCATED_IN = "located_in"
 def degree_distribution(edges: DataFrame) -> DataFrame:
     """(pred, direction, degree, n_nodes): how many nodes have a given
     out-/in-degree, per predicate — the first sanity query over any KG.
-    Per-node degrees are salted two-phase (hot canonical addresses), the
-    histogram over (pred, degree) is uniform by construction. The edges
+    Per-node degrees and the histogram over (pred, degree) are each one
+    aggregate with a map-side partial and one exchange. The edges
     input feeds BOTH direction branches, so it is persisted (scope-aware,
     see dedup.dedup_cache_scope) — without it an unmaterialized upstream
     pipeline would run twice."""
     edges = _persist(edges)
 
     def degrees(node_col: str, direction: str) -> DataFrame:
-        per_node = salted_agg(
-            edges.select("pred", F.col(node_col).alias("node")),
-            keys=("pred", "node"),
-            partial_aggs=[F.count(F.lit(1)).alias("_pc")],
-            final_aggs=[F.sum("_pc").cast("long").alias("degree")],
+        per_node = edges.groupBy("pred", F.col(node_col).alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
         )
         return per_node.groupBy("pred", "degree").agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes")
@@ -70,17 +68,15 @@ def top_addresses_per_repo(edges: DataFrame, k: int = 3) -> DataFrame:
     """(repo, address_id, n_files, rank): the k most-mentioned canonical
     addresses per repo, by number of distinct mentioning files (each
     mentions_address edge IS one distinct (file, address) pair — the edge
-    table is deduped), ties broken by address id. The count is salted
-    (mega-repo skew); the rank window runs on the aggregated counts."""
+    table is deduped), ties broken by address id. The count is one
+    aggregate whose map-side partial absorbs the mega-repo skew; the rank
+    window runs on the aggregated counts."""
     m = edges.filter(F.col("pred") == MENTIONS).select(
         F.substring_index("subj", ":", 1).alias("repo"),
         F.col("obj").alias("address_id"),
     )
-    counts = salted_agg(
-        m,
-        keys=("repo", "address_id"),
-        partial_aggs=[F.count(F.lit(1)).alias("_pc")],
-        final_aggs=[F.sum("_pc").cast("long").alias("n_files")],
+    counts = m.groupBy("repo", "address_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files")
     )
     w = Window.partitionBy("repo").orderBy(
         F.desc("n_files"), F.asc("address_id")

@@ -26,6 +26,7 @@ import re
 from dataclasses import dataclass
 
 from . import CONF_ADDRESS, CONF_OTHER, LABEL_B, LABEL_I, LABEL_O
+from .sources.admin_regions import start_region_names
 
 
 # --------------------------------------------------------------------------
@@ -81,21 +82,10 @@ def bio_tags_from_span(
 # Lexicon/regex tagger (deterministic twin of the distributed tagger)
 # --------------------------------------------------------------------------
 
-# Top-level (si/do) region names that can *start* an address, incl. aliases.
-# The pipeline's runtime set comes from sources.admin_regions; this local copy
-# keeps the oracle dependency-free and is asserted equal in tests.
-START_REGIONS = frozenset(
-    {
-        "서울특별시", "서울시",
-        "경기도",
-        "부산광역시", "부산시",
-        "인천광역시", "인천시",
-        "경상북도",
-        "제주특별자치도",
-        "대구광역시", "대전광역시", "광주광역시", "울산광역시",
-        "강원도", "충청북도", "충청남도", "전라북도", "전라남도", "경상남도",
-    }
-)
+# Top-level (si/do) region names that can *start* an address, incl. aliases:
+# the dictionary's own set, so this tagger and the SQL tagger share one
+# lexicon (asserted equal in tests).
+START_REGIONS = start_region_names()
 
 # A continuation token extends an open address span: an admin-unit suffix
 # (시/군/구/동/읍/면/리/로/길), a road-number token (123번길 / 45번지), a

@@ -19,7 +19,7 @@ Two generators:
 2. ``synthesize_corpus`` — pure-Spark distributed generator (spark.range +
    built-in expressions only, no Python UDFs, no driver materialization) for
    bench/skew runs at arbitrary row counts, with Zipf-ish repo skew (one
-   mega-repo holds ~half the rows) to exercise salted-key linking and AQE
+   mega-repo holds ~half the rows) to exercise hot-key aggregation and AQE
    skew handling.
 
 No wall-clock, no unseeded randomness anywhere (FIXTURES.md).

@@ -1,12 +1,15 @@
 """Staged pipeline: resume, idempotency, lineage, sha invariant, eval."""
 
+import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from extract_address_ner_spark.plans.evaluate import span_prf
 from extract_address_ner_spark.plans.pipeline import StagedPipeline
 from extract_address_ner_spark.sources import corpus as C
+from extract_address_ner_spark.sources.admin_regions import hierarchy_edges
 
 
 @pytest.fixture()
@@ -36,6 +39,9 @@ def test_pipeline_end_to_end_and_resume(spark, warehouse, sf_smoke):
     out2 = p2.run(src)
     assert p2.ran_stages == []
     assert _edges_set(out2) == edges1
+    # a computed stage is read back with the schema a resumed one infers
+    for stage in StagedPipeline.STAGES:
+        assert out1[stage].schema == out2[stage].schema, stage
 
     # partial resume: drop the edges stage only → exactly it is recomputed
     shutil.rmtree(p1.stage_dir("edges"))
@@ -45,30 +51,95 @@ def test_pipeline_end_to_end_and_resume(spark, warehouse, sf_smoke):
     assert _edges_set(out3) == edges1
 
 
+def _recount(p, stage):
+    """(rows, sha_crc_sum) recomputed from the re-read stage artifact."""
+    df = p.read_stage(stage)
+    sha = (
+        F.coalesce(F.sum(F.crc32("content_sha256")), F.lit(0)).cast("long")
+        if "content_sha256" in df.columns
+        else F.lit(None).cast("long")
+    )
+    r = df.agg(F.count(F.lit(1)).alias("n"), sha.alias("s")).collect()[0]
+    return r["n"], r["s"]
+
+
+def _lineage_by_stage(p):
+    rows = p.lineage().collect()
+    by_stage = {r["stage"]: r for r in rows}
+    assert len(by_stage) == len(rows)  # one row per stage
+    return by_stage
+
+
 def test_lineage_rows(spark, warehouse, sf_smoke):
+    """The rows/sha_crc_sum observed on each stage's write equal a recount
+    of the written artifact."""
     p = StagedPipeline(spark, warehouse, run_id="r1")
     p.run(lambda: C.corpus_from_documents(spark, sf_smoke))
-    lin = p.lineage().collect()
-    stages = {r["stage"] for r in lin}
-    assert stages == set(StagedPipeline.STAGES)
-    per_stage_rows = {}
-    for r in lin:
+    lin = _lineage_by_stage(p)
+    assert set(lin) == set(StagedPipeline.STAGES)
+    for stage, r in lin.items():
         assert r["run_id"] == "r1"
         assert r["rows"] > 0
         assert r["wall_ms"] >= 0
-        per_stage_rows[r["stage"]] = per_stage_rows.get(r["stage"], 0) + r["rows"]
-    # lineage row counts reconcile with the stage artifacts
-    for stage in StagedPipeline.STAGES:
-        assert per_stage_rows[stage] == p.read_stage(stage).count()
-    # corpus/mentions stages carry the sha aggregate
-    assert all(
-        r["sha_crc_sum"] is not None for r in lin if r["stage"] == "corpus"
+        assert (r["rows"], r["sha_crc_sum"]) == _recount(p, stage), stage
+        parts = [f for f in os.listdir(p.stage_dir(stage))
+                 if f.startswith("part-")]
+        assert r["files"] == len(parts) >= 1
+    # corpus/mentions stages carry the sha aggregate; edges/nodes have none
+    assert lin["corpus"]["sha_crc_sum"] is not None
+    assert lin["mentions"]["sha_crc_sum"] is not None
+    assert lin["edges"]["sha_crc_sum"] is None
+
+
+def test_lineage_empty_stages(spark, warehouse, sf_smoke):
+    """A corpus without Hangul: the mentions and canonical stages are empty
+    and get lineage rows of 0 (the observation of an empty write returns,
+    it does not hang); the edge stage holds only the static backbone."""
+    src = lambda: (  # noqa: E731
+        C.corpus_from_documents(spark, sf_smoke)
+        .withColumn("content",
+                    F.concat(F.lit("plain ascii doc "), F.col("doc_id")))
+        .withColumn("content_sha256", F.sha2("content", 256))
     )
+    p = StagedPipeline(spark, warehouse, run_id="r1")
+    out = p.run(src)
+    assert p.ran_stages == list(StagedPipeline.STAGES)
+    lin = _lineage_by_stage(p)
+    assert lin["mentions"]["sha_crc_sum"] == 0  # empty sum, not NULL
+    for stage in ("mentions", "canonical"):
+        assert lin[stage]["rows"] == 0
+        assert out[stage].count() == 0
+    assert lin["edges"]["rows"] == len(hierarchy_edges())
+    assert out["edges"].filter("pred = 'mentions_address'").count() == 0
+    for stage in StagedPipeline.STAGES:
+        assert (lin[stage]["rows"], lin[stage]["sha_crc_sum"]) == _recount(
+            p, stage), stage
+
+
+def test_resume_keeps_lineage_of_skipped_stages(spark, warehouse, sf_smoke):
+    src = lambda: C.corpus_from_documents(spark, sf_smoke)  # noqa: E731
+    p1 = StagedPipeline(spark, warehouse, run_id="r1")
+    p1.run(src)
+    before = _lineage_by_stage(p1)
+    shutil.rmtree(p1.stage_dir("edges"))
+    p2 = StagedPipeline(spark, warehouse, run_id="r2")
+    p2.run(src)
+    assert p2.ran_stages == ["edges"]
+    after = _lineage_by_stage(p2)
+    assert set(after) == set(StagedPipeline.STAGES)
+    for stage in StagedPipeline.STAGES:
+        if stage == "edges":
+            assert after[stage]["run_id"] == "r2"
+            assert after[stage]["rows"] == before[stage]["rows"]
+        else:
+            assert after[stage] == before[stage]
 
 
 def test_pipeline_info(spark, warehouse, sf_smoke):
     p = StagedPipeline(spark, warehouse, run_id="r1")
     p.run(lambda: C.corpus_from_documents(spark, sf_smoke))
+    assert p.info().columns == [
+        "stage", "run_id", "rows", "partitions", "wall_ms"]
     info = {r["stage"]: r for r in p.info().collect()}
     assert set(info) == set(StagedPipeline.STAGES)
     for stage, r in info.items():

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from extract_address_ner_spark.operators import ann
 from extract_address_ner_spark.operators.canonicalize import canonicalize_mentions
-from extract_address_ner_spark.operators.link import build_edges
+from extract_address_ner_spark.operators.link import (
+    build_edges,
+    repo_mention_counts,
+)
 from extract_address_ner_spark.operators.tagger import extract_mentions
 from extract_address_ner_spark.operators.validate import road_address_gate
 from extract_address_ner_spark.sources import corpus as C
@@ -20,6 +23,61 @@ from extract_address_ner_spark.sources import corpus as C
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_WRAPPERS = ("AdaptiveSparkPlan", "InputAdapter", "WholeStageCodegen")
+
+
+def _unwrap(node):
+    """Look through the adaptive wrapper, its query stages and the codegen
+    wrappers to the operator they hold."""
+    while True:
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        elif name.endswith("QueryStage"):
+            node = node.plan()
+        elif name.startswith(_WRAPPERS):
+            node = node.children().apply(0)
+        else:
+            return node
+
+
+def _ops(df):
+    """(grandparent, parent, operator) for every operator of the executed
+    plan, wrappers removed; missing ancestors are None. Cached relations
+    are leaves."""
+    out = []
+
+    def walk(node, parent, grandparent):
+        node = _unwrap(node)
+        out.append((grandparent, parent, node))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), node, parent)
+
+    walk(df._jdf.queryExecution().executedPlan(), None, None)
+    return out
+
+
+def _is_hash_exchange(node) -> bool:
+    return (node is not None and node.nodeName() == "Exchange"
+            and "hashpartitioning" in node.simpleString(100))
+
+
+def _is_partial_agg(node) -> bool:
+    return (node.nodeName() == "HashAggregate"
+            and "partial_" in node.simpleString(100))
+
+
+def _partial_aggs(ops):
+    """(grandparent, parent, partial aggregate) for every map-side partial
+    aggregate in ``ops``."""
+    return [op for op in ops if _is_partial_agg(op[2])]
+
+
+def _n_hash_exchanges(ops) -> int:
+    return sum(_is_hash_exchange(n) for _g, _p, n in ops)
 
 
 def test_graph_edges_joins_are_broadcast_only(spark, sf_smoke):
@@ -84,9 +142,32 @@ def test_ann_query_filter_pushed_to_scan(spark, sf_smoke):
     assert "LessThan(vec_id,5)" in plan  # PushedFilters reaches parquet
 
 
-def test_repo_counts_aggregation_has_map_side_partial(spark, sf_smoke):
-    from extract_address_ner_spark.operators.link import repo_mention_counts
+def test_repo_counts_partial_bounds_hot_key(spark):
+    """SURVEY §5.2.5: mega-repo skew. With the mega-repo spread over 64
+    input partitions, the map-side partial aggregate in front of
+    repo_mention_counts' single exchange emits at most one row per
+    (repo, input partition): the hot key's 10000 rows reach the shuffle as
+    at most 64 partial counts."""
+    # at scale the input spans many partitions; 64 here stands in for the
+    # thousands a real corpus scan produces
+    df = C.synthesize_corpus(spark, 20000, seed=1).repartition(64) \
+        .select("repo")
+    assert df.filter(F.col("repo") == "repo_mega").count() == 10000
+    pairs = df.select(F.spark_partition_id(), "repo").distinct().count()
+    counts = repo_mention_counts(df)
+    got = {r["repo"]: r["n_mentions"] for r in counts.collect()}
+    assert got["repo_mega"] == 10000 and sum(got.values()) == 20000
 
+    ops = _ops(counts)
+    (_final, parent, partial), = _partial_aggs(ops)
+    # the partial's rows cross exactly one exchange, into the final count
+    assert _is_hash_exchange(parent)
+    assert _n_hash_exchanges(ops) == 1
+    emitted = partial.metrics().apply("numOutputRows").value()
+    assert len(got) <= emitted <= pairs
+
+
+def test_repo_counts_aggregation_has_map_side_partial(spark, sf_smoke):
     m = extract_mentions(C.corpus_from_documents(spark, sf_smoke))
     plan = _plan(repo_mention_counts(m))
     assert "partial_" in plan  # partial agg before every exchange
@@ -100,6 +181,34 @@ def _built_edges(spark, sf_smoke):
             )
         )
     )
+
+
+def test_build_edges_single_hash_exchange(spark, sf_smoke):
+    """The whole KG edge chain shuffles once: build_edges' dedup/max over
+    both edge families is one aggregate behind one hash exchange (the
+    dimension joins upstream are broadcast)."""
+    ops = _ops(_built_edges(spark, sf_smoke))
+    assert _n_hash_exchanges(ops) == 1
+    (_final, parent, _partial), = _partial_aggs(ops)
+    assert _is_hash_exchange(parent)
+
+
+def test_graph_query_groupings_one_partial_one_exchange(spark, sf_smoke):
+    """Every grouping in degree_distribution (per-node degree and the
+    degree histogram, per direction) and top_addresses_per_repo is one
+    map-side partial aggregate followed by one exchange into its final
+    aggregate — no second, salted aggregation phase."""
+    from extract_address_ner_spark.operators import graph_query as GQ
+
+    edges = _built_edges(spark, sf_smoke)
+    for df, groupings in ((GQ.degree_distribution(edges), 4),
+                          (GQ.top_addresses_per_repo(edges), 1)):
+        partials = _partial_aggs(_ops(df))
+        assert len(partials) == groupings, _plan(df)
+        for final, exchange, _partial in partials:
+            assert _is_hash_exchange(exchange), _plan(df)
+            assert final.nodeName() == "HashAggregate", _plan(df)
+            assert not _is_partial_agg(final), _plan(df)
 
 
 def test_graph_queries_no_sort_merge_join(spark, sf_smoke):
@@ -356,3 +465,25 @@ def test_label_propagation_no_window_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Window" not in plan, plan
     assert "row_number" not in plan, plan
+
+
+#: Spark jobs one StagedPipeline.run over the smoke corpus may start: one
+#: write per stage plus the shuffle-map and broadcast stages AQE submits as
+#: jobs of their own. Re-scanning a written stage for lineage, or inferring
+#: the schema of a stage just written, adds jobs and breaks it.
+PIPELINE_JOB_CEILING = 10
+
+
+def test_pipeline_run_job_ceiling(spark, sf_smoke, tmp_path):
+    from extract_address_ner_spark.plans.pipeline import StagedPipeline
+
+    sc = spark.sparkContext
+    group = "pipeline-job-ceiling"
+    sc.setJobGroup(group, "StagedPipeline.run job count")
+    try:
+        StagedPipeline(spark, str(tmp_path / "wh"), run_id="r1").run(
+            lambda: C.corpus_from_documents(spark, sf_smoke))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= PIPELINE_JOB_CEILING, n_jobs

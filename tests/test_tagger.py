@@ -105,7 +105,7 @@ def test_pandas_path_equals_oracle(spark):
 
 def test_regex_and_lexicon_in_sync():
     assert CONT_REGEX == oracle._CONT_RE.pattern
-    assert start_region_names() >= oracle.START_REGIONS
+    assert start_region_names() == oracle.START_REGIONS
 
 
 def test_bare_i_quirk():
